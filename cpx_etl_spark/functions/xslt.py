@@ -1,6 +1,8 @@
-"""Minimal XSLT 1.0 subset interpreter on the stdlib xml.etree — so a
-REAL ``.xsl`` stylesheet executes in this container (libxslt/lxml are
-absent; lxml is used as the fast path when importable).
+"""Minimal XSLT 1.0 subset engine on the stdlib xml.etree, so a REAL
+``.xsl`` stylesheet executes without libxslt (lxml is used as the fast
+path when importable). Each stylesheet compiles once into Python
+closures — instruction bodies, selects, tests and bindings — and
+``apply`` runs those closures per document.
 
 Parity: the reference's ``xslTransform``/``xslPipeline``
 (src/main/index.js:87-126) resolves a control document's ``xi:include``
@@ -39,21 +41,37 @@ wrong answers are impossible):
   ``@attr``, ``.``, ``text()``, ``*``, ``[...]`` predicates (predicates
   may contain nested paths — bracket/quote-aware parsing); tests
   support ``not(...)``, existence, and ``= != < <= > >=`` against
-  quoted-string or numeric literals or ``$var`` references
+  quoted-string or numeric literals or ``$var`` references; a numeric
+  literal follows the XPath Number grammar (``nan`` / ``inf`` are names)
 """
 
 from __future__ import annotations
 
+import re
 import xml.etree.ElementTree as ET
 from xml.sax.saxutils import escape, quoteattr
 
 XSL_NS = "http://www.w3.org/1999/XSL/Transform"
 _OPS = ("!=", ">=", "<=", "=", "<", ">")
-_MISSING = object()  # "kind not passed" sentinel for _run_node
+# XPath 1.0 Number: -?(Digits ('.' Digits?)? | '.' Digits)
+_NUMBER = re.compile(r"-?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)")
 
 
 class XsltUnsupported(ValueError):
     """Stylesheet uses XSLT outside the implemented subset."""
+
+
+def _const(s: str):
+    return lambda ctx: s
+
+
+def _raiser(msg: str):
+    """fn(ctx) raising XsltUnsupported(msg): an unsupported construct
+    fails when it RUNS, never when the stylesheet compiles."""
+
+    def fn(ctx):
+        raise XsltUnsupported(msg)
+    return fn
 
 
 class _Doc:
@@ -126,37 +144,28 @@ def _ensure_recursion_limit() -> None:
         _RECLIMIT_OK = True
 
 
-def _close_paren(s: str, start: int) -> int:
-    """Index of the ')' matching the '(' at ``start``, quote-aware."""
-    depth = 0
-    in_q = False
-    for i in range(start, len(s)):
-        ch = s[i]
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return i
-    raise XsltUnsupported(f"unbalanced parentheses in {s!r}")
-
-
-def _scan_brackets(s: str):
-    """Yield (i, ch, depth, in_quote) with depth counted OUTSIDE quotes."""
+def _scan_brackets(s: str, opens: str = "[", closes: str = "]"):
+    """Yield (i, ch, depth, in_quote), depth counting the ``opens`` /
+    ``closes`` characters seen OUTSIDE quotes up to and including i."""
     depth = 0
     in_q = False
     for i, ch in enumerate(s):
         if ch == "'":
             in_q = not in_q
         elif not in_q:
-            if ch == "[":
+            if ch in opens:
                 depth += 1
-            elif ch == "]":
+            elif ch in closes:
                 depth -= 1
         yield i, ch, depth, in_q
+
+
+def _close_paren(s: str, start: int) -> int:
+    """Index of the ')' matching the '(' at ``start``, quote-aware."""
+    for i, ch, depth, in_q in _scan_brackets(s[start:], "(", ")"):
+        if ch == ")" and depth == 0 and not in_q:
+            return start + i
+    raise XsltUnsupported(f"unbalanced parentheses in {s!r}")
 
 
 @functools.lru_cache(maxsize=4096)
@@ -199,24 +208,11 @@ def _split_union(expr: str) -> tuple[str, ...]:
 
 
 @functools.lru_cache(maxsize=4096)
-def _split_path(path: str) -> tuple[str, ...]:
-    """Split a path on '/' at bracket depth 0 outside quotes, so
-    predicates containing path steps (a[b/c]) stay intact (ADVICE r5)."""
-    parts: list[str] = []
-    start = 0
-    for i, ch, depth, in_q in _scan_brackets(path):
-        if ch == "/" and depth == 0 and not in_q:
-            parts.append(path[start:i])
-            start = i + 1
-    parts.append(path[start:])
-    return tuple(p for p in parts if p)
-
-
-@functools.lru_cache(maxsize=4096)
 def _split_path_marked(path: str) -> tuple[tuple[str, bool], ...]:
-    """Split on '/' keeping '//' semantics: each returned (segment,
-    is_descendant) marks whether the step is reached via the
-    descendant axis. A leading empty part (absolute path) is skipped —
+    """Split on '/' at bracket depth 0 outside quotes (so predicates
+    holding paths, a[b/c], stay intact), keeping '//' semantics: each
+    returned (segment, is_descendant) marks whether the step is reached
+    via the descendant axis. A leading empty part (absolute path) is skipped —
     the caller roots absolute paths itself. Malformed runs ('///',
     trailing '//') fail fast. Before this, 'a//b' silently collapsed
     to 'a/b' — a contract violation (silent wrong answers)."""
@@ -251,20 +247,11 @@ def _split_args(inner: str) -> tuple[str, ...]:
     """Split a function-argument list on top-level commas (outside
     quotes, brackets, and nested parens)."""
     parts: list[str] = []
-    depth = 0
-    in_q = False
     start = 0
-    for i, ch in enumerate(inner):
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append(inner[start:i])
-                start = i + 1
+    for i, ch, depth, in_q in _scan_brackets(inner, "([", ")]"):
+        if ch == "," and depth == 0 and not in_q:
+            parts.append(inner[start:i])
+            start = i + 1
     parts.append(inner[start:])
     return tuple(p.strip() for p in parts if p.strip())
 
@@ -272,10 +259,9 @@ def _split_args(inner: str) -> tuple[str, ...]:
 @functools.lru_cache(maxsize=8192)
 def _select_plan(path: str) -> tuple:
     """Classify a select expression once (selects are
-    stylesheet-static): the per-call string scans that dominated
-    _select's dispatch — strip, endswith/index, isalnum — run here a
-    single time per distinct expression. Returns (tag, payload,
-    stripped_path); tags: 0 '.', 1 position()/last(), 2 function call
+    stylesheet-static): the string scans — strip, endswith/index,
+    isalnum — run a single time per distinct expression. Returns
+    (tag, payload, stripped_path); tags: 0 '.', 1 position()/last(), 2 function call
     (payload = (fname, inner)), 3 bare @attr, 4 bare name, 5 $var
     (payload = the name), 6 general path."""
     p = path.strip()
@@ -358,34 +344,21 @@ def _path_steps(path: str) -> tuple[tuple[str, tuple[str, ...], bool], ...]:
 def _split_comparison(expr: str):
     """Find the top-level comparison operator: outside quotes AND
     outside [...] predicates (which contain their own comparisons)."""
-    in_quote = False
-    depth = 0
-    i = 0
-    while i < len(expr):
-        ch = expr[i]
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "[":
-                depth += 1
-            elif ch == "]":
-                depth -= 1
-            elif depth == 0:
-                for op in _OPS:
-                    if expr.startswith(op, i):
-                        return expr[:i].strip(), op, expr[i + len(op) :].strip()
-        i += 1
+    for i, ch, depth, in_q in _scan_brackets(expr):
+        if depth == 0 and not in_q:
+            for op in _OPS:
+                if expr.startswith(op, i):
+                    return expr[:i].strip(), op, expr[i + len(op) :].strip()
     return None
 
 
 def _literal(token: str):
-    """Quoted-string or numeric literal, else None (it's a path)."""
+    """Quoted-string or numeric literal, else None (it's a path). Only
+    the XPath Number grammar is numeric: float() would also read
+    'nan', 'inf', '1e3' and '1_000'."""
     if len(token) >= 2 and token[0] == "'" and token[-1] == "'":
         return token[1:-1]
-    try:
-        return float(token)
-    except ValueError:
-        return None
+    return float(token) if _NUMBER.fullmatch(token) else None
 
 
 @functools.lru_cache(maxsize=8192)
@@ -418,32 +391,16 @@ def _test_plan(expr: str) -> tuple:
 def _split_bool(expr: str, word: str) -> tuple[str, ...]:
     """Split on the XPath boolean operator ``word`` (' and ' / ' or ')
     at paren/bracket depth 0 outside quotes. Cached like _path_steps:
-    the expression set is stylesheet-static but _test runs per node
-    per row."""
+    the expression set is stylesheet-static."""
     parts: list[str] = []
-    depth = 0
-    in_q = False
     start = 0
-    i = 0
     token = f" {word} "
-    n = len(token)
-    while i < len(expr):
-        ch = expr[i]
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif depth == 0 and expr.startswith(token, i):
-                parts.append(expr[start:i])
-                i += n
-                start = i
-                continue
-        i += 1
+    for i, ch, depth, in_q in _scan_brackets(expr, "([", ")]"):
+        if i >= start and depth == 0 and not in_q and expr.startswith(token, i):
+            parts.append(expr[start:i])
+            start = i + len(token)
     parts.append(expr[start:])
-    return tuple(p for p in parts)
+    return tuple(parts)
 
 
 # the default decimal-format (XSLT 1.0 §12.3) — a named/unnamed
@@ -812,7 +769,7 @@ class MiniXslt:
         # declares bindings — so the per-row executor does dict lookups
         # instead of re-classifying namespace strings for every node of
         # every document (measured +53% on q_xsl_execute without this).
-        # match patterns stripped once; _split_path/_parse_step caches
+        # match patterns stripped once; _split_path_marked/_parse_step caches
         # make the per-node match loop allocation-free. Templates are
         # grouped by mode: apply-templates with mode="m" dispatches
         # ONLY against mode-m templates (XSLT 1.0 §5.7), and the
@@ -900,15 +857,13 @@ class MiniXslt:
             self._dynattrs[id(elem)] = tuple(
                 c for c in elem if _is_xsl(c, "attribute")
             )
-        # per-container instruction lists + per-element markup statics:
-        # the stylesheet tree is immutable across rows, so everything
-        # derivable from it alone (child kinds, whitespace-significant
-        # text/tails, literal attributes without AVT expressions,
-        # use-attribute-sets / attr-copy presence) compiles ONCE here
-        # instead of being re-derived on every rendered node — ~25% of
-        # apply() time at the q_xsl_execute row shape went to exactly
-        # these re-derivations (profiled r13)
-        self._ops: dict[int, tuple] = {}
+        # per-element markup statics: the stylesheet tree is immutable
+        # across rows, so everything derivable from it alone (literal
+        # attributes without AVT expressions, use-attribute-sets /
+        # attr-copy presence) compiles ONCE here instead of being
+        # re-derived on every rendered node — ~25% of apply() time at
+        # the q_xsl_execute row shape went to exactly these
+        # re-derivations (profiled r13)
         self._emeta: dict[int, tuple] = {}
         self._lattrs: dict[int, tuple] = {}
         for elem in (e for r in self._sheet_roots for e in r.iter()):
@@ -960,14 +915,10 @@ class MiniXslt:
                     self._lattrs[id(elem)] = (tag, static, None)
                 else:
                     self._lattrs[id(elem)] = (tag, None, pairs)
-        # ops LAST: specializing a parent's child ops reads the
-        # children's _emeta/_lattrs, and iter() is preorder
-        for elem in (e for r in self._sheet_roots for e in r.iter()):
-            self._ops[id(elem)] = self._compile_ops(elem)
-        # r18 closure compilation: every static op list, select and test
-        # expression becomes a bound closure once per stylesheet — the
-        # per-row executor then runs closure bodies instead of tag-
-        # dispatch chains (see the compiled-evaluators section below)
+        # closure compilation: every instruction body, select, test and
+        # binding becomes a bound closure once per stylesheet, so the
+        # per-row cost is the closure bodies alone (see the compiled
+        # evaluators section below)
         self._sel_fns: dict[str, object] = {}
         self._test_fns: dict[str, object] = {}
         self._bind_fns: dict[int, object] = {}
@@ -978,9 +929,7 @@ class MiniXslt:
         for root in self._sheet_roots:
             for elem in reversed(list(root.iter())):
                 if isinstance(elem.tag, str):
-                    self._cfns[id(elem)] = tuple(
-                        self._compile_fn(op) for op in self._ops[id(elem)]
-                    )
+                    self._cfns[id(elem)] = self._compile_body(elem)
         # fast template dispatch (r18): in a mode whose every match
         # pattern is '/' or a plain element name, the winning template
         # per node is a static function of the node's tag alone (equal
@@ -1016,247 +965,216 @@ class MiniXslt:
             if ok:
                 self._fast_dispatch[mode] = (doc_rule, by_name)
 
-    # op tags for the precompiled _run_children lists
-    (_OP_TEXT, _OP_VAR, _OP_PARAM, _OP_NODE, _OP_BADCOPY, _OP_VALUEOF,
-     _OP_IF, _OP_LITELEM, _OP_APPLYT, _OP_CHOOSE) = range(10)
-
-    def _compile_ops(self, container: ET.Element) -> tuple:
-        """Compile a container's children into a flat instruction list
-        mirroring _run_children's dispatch — static text/tails are
-        escaped here, consumed-by-parent children (sort / with-param /
-        attribute / comments) are dropped, and a stray attr-copy keeps
-        its RENDER-time failure (emitted as a raising op) so behavior
-        matches the interpreted path exactly. The kinds that dominate
-        row stylesheets (value-of, xsl:text, xsl:if, choose,
-        apply-templates, literal elements with static attributes)
-        specialize to dedicated ops with their static payloads
-        extracted, skipping the generic _run_node dispatch; everything
-        else stays on the generic (_OP_NODE) path."""
-        ops: list[tuple] = []
+    def _compile_body(self, container: ET.Element) -> tuple:
+        """Compile a container's children into its closure list, each
+        fn(ctx) -> str. Static text and tails are escaped here; children
+        consumed by the enclosing instruction or element (sort /
+        with-param / attribute / comments, and an attr-copy inside an
+        element constructor) are dropped. A stray attr-copy keeps its
+        RENDER-time failure as a raising closure."""
+        fns: list = []
         t = container.text
         if t and t.strip():
-            ops.append((self._OP_TEXT, escape(t)))
-        ckind = self._kind.get(id(container))
+            fns.append(_const(escape(t)))
+        ckind = self._kind[id(container)]
         for child in container:
-            kind = self._kind.get(id(child), None)
-            if kind is None:
-                la = self._lattrs.get(id(child))
-                if (
-                    la is not None
-                    and la[1] is not None
-                    and self._emeta.get(id(child)) == (None, False)
-                    and not self._dynattrs.get(id(child))
-                ):
-                    ops.append((self._OP_LITELEM, la[0], la[1], child))
-                else:
-                    ops.append((self._OP_NODE, child, None))
-            elif kind == "value-of":
-                ops.append((self._OP_VALUEOF, child.get("select", ".")))
-            elif kind == "text":
+            kind = self._kind[id(child)]
+            if kind == "text":
                 txt = escape(child.text or "")
                 if txt:
-                    ops.append((self._OP_TEXT, txt))
-            elif kind == "if":
-                ops.append((self._OP_IF, child.get("test", ""), child))
-            elif kind == "choose":
-                whens = tuple(
-                    (b.get("test", ""), b)
-                    for b in child
-                    if _is_xsl(b, "when")
-                )
-                otherw = next(
-                    (b for b in child if _is_xsl(b, "otherwise")), None
-                )
-                ops.append((self._OP_CHOOSE, whens, otherw))
-            elif kind == "apply-templates":
-                ops.append((
-                    self._OP_APPLYT,
-                    child.get("select"),
-                    child.get("mode"),
-                    child,
-                    bool(self._sorts.get(id(child))),
-                    bool(self._wparams.get(id(child))),
-                ))
-            elif kind == "variable":
-                ops.append((self._OP_VAR, child))
-            elif kind == "param":
-                ops.append((self._OP_PARAM, child))
-            elif kind in ("sort", "with-param", "attribute", "#comment"):
-                pass  # consumed by the enclosing instruction/element
+                    fns.append(_const(txt))
             elif kind == "#attr-copy":
                 if ckind not in (None, "element", "copy"):
-                    ops.append((self._OP_BADCOPY, child))
-            else:
-                ops.append((self._OP_NODE, child, kind))
+                    fns.append(_raiser(
+                        'copy-of select="@*" outside an element constructor'
+                    ))
+            elif kind not in ("sort", "with-param", "attribute", "#comment"):
+                fns.append(self._compile_instr(child, kind))
             tl = child.tail
             if tl and tl.strip():
-                ops.append((self._OP_TEXT, escape(tl)))
-        return tuple(ops)
+                fns.append(_const(escape(tl)))
+        return tuple(fns)
 
-    def _compile_fn(self, op):
-        """One op tuple -> fn(ctx) -> str (r18). Each closure is the
-        exact body of the corresponding _run_children dispatch arm with
-        its static payload pre-bound (and selects/tests pre-compiled),
-        so the per-row loop never re-inspects op tags or re-plans
-        expressions. Side-effecting ops (variable/param bindings)
-        return ''."""
+    def _body_fn(self, elem: ET.Element):
+        """Runner for a nested instruction body: when the body declares
+        no bindings (the common case), its already-compiled closure list
+        is inlined — no _run_children re-entry, no scope push (identical
+        semantics: _run_children skips the scope for binding-free bodies
+        too). Requires children-first compilation order."""
+        if self._hasbind[id(elem)]:
+            return lambda ctx: self._run_children(elem, ctx)
+        fns = self._cfns[id(elem)]
+        if not fns:
+            return _const("")
+        if len(fns) == 1:
+            return fns[0]
+        return lambda ctx: "".join(f(ctx) for f in fns)
 
-        def body(elem):
-            """Runner for a nested instruction body: when the body
-            declares no bindings (the common case), its already-
-            compiled closure list is inlined — no _run_children
-            re-entry, no scope push (identical semantics: the generic
-            path skips the scope for binding-free bodies too).
-            Requires children-first compilation order."""
-            fns = self._cfns.get(id(elem))
-            if fns is None or self._hasbind.get(id(elem), True):
-                return lambda ctx, _e=elem: self._run_children(_e, ctx)
-            if not fns:
-                return lambda ctx: ""
-            if len(fns) == 1:
-                return fns[0]
-            return lambda ctx, _f=fns: "".join(f(ctx) for f in _f)
+    def _default_nodes(self, ctx) -> list:
+        """apply-templates without select: the context's children."""
+        if isinstance(ctx, ET.Element):
+            return self._node_children(ctx)
+        if isinstance(ctx, _Doc):
+            return [ctx.root]
+        return []
 
-        tag = op[0]
-        if tag == self._OP_TEXT:
-            return lambda ctx, _s=op[1]: _s
-        if tag == self._OP_VALUEOF:
-            sel = self._compile_select(op[1])
+    def _compile_instr(self, elem: ET.Element, kind: str | None):
+        """One instruction or literal result element -> fn(ctx) -> str,
+        with its static payload pre-bound and its selects / tests
+        compiled, so the per-row loop never re-inspects the stylesheet.
+        Bindings (variable / param) write the innermost scope and
+        return ''. A kind outside the subset compiles to a closure that
+        raises when it runs."""
+        if kind is None:  # literal result element
+            tag, static, pairs = self._lattrs[id(elem)]
+            if (
+                static is not None
+                and self._emeta[id(elem)] == (None, False)
+                and not self._dynattrs[id(elem)]
+            ):
+                sub = self._body_fn(elem)
 
-            def f_valueof(ctx, _s=sel):
-                items = _s(ctx)
+                def f_lit(ctx):
+                    inner = sub(ctx)
+                    return (f"<{tag}{static}>{inner}</{tag}>" if inner
+                            else f"<{tag}{static}/>")
+                return f_lit
+
+            # XSL-namespaced attributes (xsl:use-attribute-sets) are
+            # instructions, not output — _lattrs already dropped them
+            def f_elem(ctx):
+                attrs = static if static is not None else "".join(
+                    f" {k}={quoteattr(self._avt(v, ctx))}" for k, v in pairs
+                )
+                return self._element_markup(tag, elem, ctx, attrs)
+            return f_elem
+        if kind in ("value-of", "copy-of"):
+            sel = self._compile_select(elem.get("select", "."))
+            if kind == "copy-of":
+                return lambda ctx: "".join(
+                    self._serialize(it) for it in sel(ctx)
+                )
+
+            def f_valueof(ctx):
+                items = sel(ctx)
                 return escape(_string(items[0])) if items else ""
             return f_valueof
-        if tag == self._OP_LITELEM:
-            sub = body(op[3])
-
-            def f_lit(ctx, _t=op[1], _a=op[2], _b=sub):
-                inner = _b(ctx)
-                return (f"<{_t}{_a}>{inner}</{_t}>" if inner
-                        else f"<{_t}{_a}/>")
-            return f_lit
-        if tag == self._OP_IF:
-            tst = self._compile_test(op[1])
-            sub = body(op[2])
-
-            def f_if(ctx, _t=tst, _b=sub):
-                return _b(ctx) if _t(ctx) else ""
-            return f_if
-        if tag == self._OP_CHOOSE:
+        if kind == "if":
+            tst = self._compile_test(elem.get("test", ""))
+            sub = self._body_fn(elem)
+            return lambda ctx: sub(ctx) if tst(ctx) else ""
+        if kind == "choose":
             whens = tuple(
-                (self._compile_test(t), body(b)) for t, b in op[1]
+                (self._compile_test(b.get("test", "")), self._body_fn(b))
+                for b in elem
+                if _is_xsl(b, "when")
             )
-            otherw = body(op[2]) if op[2] is not None else None
+            otherw = next(
+                (self._body_fn(b) for b in elem if _is_xsl(b, "otherwise")),
+                _const(""),
+            )
 
-            def f_choose(ctx, _w=whens, _o=otherw):
-                for t, br in _w:
+            def f_choose(ctx):
+                for t, br in whens:
                     if t(ctx):
                         return br(ctx)
-                return _o(ctx) if _o is not None else ""
+                return otherw(ctx)
             return f_choose
-        if tag == self._OP_APPLYT:
-            _, sel, mode, elem2, has_sorts, has_wp = op
-            selfn = self._compile_select(sel) if sel is not None else None
+        if kind == "apply-templates":
+            sel = elem.get("select")
+            selfn = (self._compile_select(sel) if sel is not None
+                     else self._default_nodes)
+            mode = elem.get("mode")
+            has_sorts = bool(self._sorts[id(elem)])
+            has_wp = bool(self._wparams[id(elem)])
             if not has_sorts and not has_wp:
-                def f_applyt(ctx, _s=selfn, _m=mode):
-                    if _s is not None:
-                        nodes = _s(ctx)
-                    elif isinstance(ctx, ET.Element):
-                        nodes = self._node_children(ctx)
-                    elif isinstance(ctx, _Doc):
-                        nodes = [ctx.root]
-                    else:
-                        nodes = []
-                    return self._iterate(
-                        nodes, lambda n: self._apply_one(n, None, _m)
-                    )
-                return f_applyt
-
-            def f_applyt_full(ctx, _s=selfn, _m=mode, _e=elem2,
-                              _hs=has_sorts, _hw=has_wp):
-                if _s is not None:
-                    nodes = _s(ctx)
-                elif isinstance(ctx, ET.Element):
-                    nodes = self._node_children(ctx)
-                elif isinstance(ctx, _Doc):
-                    nodes = [ctx.root]
-                else:
-                    nodes = []
-                if _hs:
-                    nodes = self._sorted_nodes(nodes, _e, ctx)
-                tparams = (
-                    (self._gather_params(_e, ctx) or None) if _hw else None
+                return lambda ctx: self._iterate(
+                    selfn(ctx), lambda n: self._apply_one(n, None, mode)
                 )
+
+            def f_applyt_full(ctx):
+                nodes = selfn(ctx)
+                if has_sorts:
+                    nodes = self._sorted_nodes(nodes, elem, ctx)
+                tparams = (self._gather_params(elem, ctx) or None) if has_wp else None
                 return self._iterate(
-                    nodes,
-                    lambda n, _p=tparams: self._apply_one(n, _p, _m),
+                    nodes, lambda n: self._apply_one(n, tparams, mode)
                 )
             return f_applyt_full
-        if tag == self._OP_NODE:
-            elem, kind = op[1], op[2]
-            if kind == "for-each":
-                sel = self._compile_select(elem.get("select", "."))
-                has_sorts = bool(self._sorts.get(id(elem)))
-                sub = body(elem)
-                if not has_sorts and not self._needs_pos:
-                    def f_foreach(ctx, _s=sel, _b=sub):
-                        return "".join(_b(n) for n in _s(ctx))
-                    return f_foreach
+        if kind == "for-each":
+            sel = self._compile_select(elem.get("select", "."))
+            has_sorts = bool(self._sorts[id(elem)])
+            sub = self._body_fn(elem)
+            if not has_sorts and not self._needs_pos:
+                return lambda ctx: "".join(sub(n) for n in sel(ctx))
 
-                def f_foreach_full(ctx, _s=sel, _e=elem, _b=sub,
-                                   _hs=has_sorts):
-                    nodes = _s(ctx)
-                    if _hs:
-                        nodes = self._sorted_nodes(nodes, _e, ctx)
-                    return self._iterate(nodes, _b)
-                return f_foreach_full
-            if kind == "call-template":
-                tname = elem.get("name", "")
-                telem = self.named.get(tname)
-                if telem is not None:
-                    wps = tuple(
-                        (wp.get("name", ""), self._compile_binding(wp))
-                        for wp in self._wparams.get(id(elem), ())
-                    )
+            def f_foreach_full(ctx):
+                nodes = sel(ctx)
+                if has_sorts:
+                    nodes = self._sorted_nodes(nodes, elem, ctx)
+                return self._iterate(nodes, sub)
+            return f_foreach_full
+        if kind == "call-template":
+            tname = elem.get("name", "")
+            telem = self.named.get(tname)
+            if telem is None:
+                return _raiser(f"call to undeclared template {tname!r}")
+            wps = tuple(
+                (wp.get("name", ""), self._compile_binding(wp))
+                for wp in self._wparams[id(elem)]
+            )
 
-                    def f_callt(ctx, _t=telem, _w=wps):
-                        params = {n: f(ctx) for n, f in _w} or None
-                        self._enter_template()
-                        try:
-                            return self._run_children(_t, ctx,
-                                                      params=params)
-                        finally:
-                            self._tdepth -= 1
-                    return f_callt
-                # undeclared target: the interpreter raises when the
-                # call RUNS — preserve that timing
-                def f_callt_missing(ctx, _n=tname):
-                    raise XsltUnsupported(
-                        f"call to undeclared template {_n!r}"
-                    )
-                return f_callt_missing
-            return lambda ctx, _e=elem, _k=kind: self._run_node(_e, ctx, _k)
-        if tag == self._OP_VAR:
-            bind = self._compile_binding(op[1])
+            def f_callt(ctx):
+                params = {n: f(ctx) for n, f in wps} or None
+                self._enter_template()
+                try:
+                    return self._run_children(telem, ctx, params=params)
+                finally:
+                    self._tdepth -= 1
+            return f_callt
+        if kind in ("variable", "param"):
+            bind = self._compile_binding(elem)
+            name = elem.get("name", "")
+            if kind == "variable":
+                def f_var(ctx):
+                    self._scopes[-1][name] = bind(ctx)
+                    return ""
+                return f_var
 
-            def f_var(ctx, _b=bind, _n=op[1].get("name", "")):
-                self._scopes[-1][_n] = _b(ctx)
-                return ""
-            return f_var
-        if tag == self._OP_PARAM:
-            bind = self._compile_binding(op[1])
-
-            def f_param(ctx, _b=bind, _n=op[1].get("name", "")):
-                if _n not in self._scopes[-1]:
-                    self._scopes[-1][_n] = _b(ctx)
+            def f_param(ctx):
+                if name not in self._scopes[-1]:  # with-param wins
+                    self._scopes[-1][name] = bind(ctx)
                 return ""
             return f_param
-
-        def f_badcopy(ctx):
-            raise XsltUnsupported(
-                'copy-of select="@*" outside an element constructor'
+        if kind == "apply-imports":
+            def f_applyimports(ctx):
+                if not self._tframes:
+                    raise XsltUnsupported(
+                        "xsl:apply-imports outside a matched template"
+                    )
+                cur_prec, cur_mode, _ = self._tframes[-1]
+                return self._apply_one(ctx, mode=cur_mode, max_prec=cur_prec)
+            return f_applyimports
+        if kind == "number":
+            return lambda ctx: self._xsl_number(elem, ctx)
+        if kind == "element":
+            name = elem.get("name", "")
+            return lambda ctx: self._element_markup(
+                self._avt(name, ctx), elem, ctx, ""
             )
-        return f_badcopy
+        if kind == "copy":
+            # shallow copy of the context node (XSLT 1.0 §7.5): elements
+            # copy the tag but NOT attributes (xsl:attribute children of
+            # the body add them); text copies through; the document node
+            # just runs the body
+            def f_copy(ctx):
+                if isinstance(ctx, str):
+                    return escape(ctx)
+                if isinstance(ctx, (_Doc, _RTF)):
+                    return self._run_children(elem, ctx)
+                return self._element_markup(_local(ctx.tag), elem, ctx, "")
+            return f_copy
+        return _raiser(f"xsl:{kind}")
 
     # -- whitespace stripping (xsl:strip-space / xsl:preserve-space) -------
 
@@ -1325,7 +1243,7 @@ class MiniXslt:
         self._scopes = [{}]
         self._ctx_pos: list[tuple[int, int]] = []
         for g in self._globals:
-            self._scopes[0][g.get("name", "")] = self._eval_binding(g, doc)
+            self._scopes[0][g.get("name", "")] = self._compile_binding(g)(doc)
         # template-dispatch depth is bounded at _MAX_TDEPTH below, but
         # a legitimate deep recursion still needs ~8 CPython frames per
         # template level — lift the interpreter limit once per process
@@ -1505,7 +1423,9 @@ class MiniXslt:
                 return None  # element node can't match a text step
             if name not in ("*", "node()") and _local(target.tag) != name:
                 return None
-            if preds and not all(self._test(target, p) for p in preds):
+            if preds and not all(
+                self._compile_test(p)(target) for p in preds
+            ):
                 return None
             n = len(preds)
             if i == 0:
@@ -1561,21 +1481,6 @@ class MiniXslt:
 
     # -- instruction execution --------------------------------------------
 
-    def _eval_binding(self, elem: ET.Element, ctx):
-        """Value of an xsl:variable / xsl:param / xsl:with-param: the
-        ``select`` expression — a quoted-string or numeric literal, or
-        a path's string-value — or the body as a result-tree fragment."""
-        sel = elem.get("select")
-        if sel is not None:
-            sel = sel.strip()
-            if len(sel) >= 2 and sel[0] == "'" and sel[-1] == "'":
-                return sel[1:-1]
-            if _literal(sel) is not None:
-                return sel  # numeric literal: keep its lexical form
-            items = self._select(ctx, sel)
-            return _string(items[0]) if items else ""
-        return _RTF(self._run_children(elem, ctx))
-
     def _lookup_var(self, name: str):
         for scope in reversed(self._scopes):
             if name in scope:
@@ -1586,99 +1491,14 @@ class MiniXslt:
                       params: dict | None = None) -> str:
         # scope push only when this body can bind anything — the common
         # body (pure output instructions) skips the stack churn
-        scoped = params is not None or self._hasbind.get(id(container), True)
+        scoped = params is not None or self._hasbind[id(container)]
         if scoped:
             self._scopes.append(dict(params) if params else {})
         try:
-            # compiled path (r18): every stylesheet-tree container has a
-            # closure list; run it directly
-            fns = self._cfns.get(id(container))
-            if fns is not None:
-                if len(fns) == 1:
-                    return fns[0](ctx)
-                return "".join(f(ctx) for f in fns)
-            ops = self._ops.get(id(container))
-            if ops is None:
-                # element outside the compiled sheet trees — compute
-                # WITHOUT memoizing: id() of a dead temporary can be
-                # reused by a different element, so caching by id is
-                # only sound for the immortal stylesheet nodes
-                ops = self._compile_ops(container)
-            frags: list[str] = []
-            run_node = self._run_node
-            select = self._select
-            # local bindings of the named opcodes: the dispatcher must
-            # track _compile_ops through any reorder of the constants
-            _OP_TEXT, _OP_VAR, _OP_PARAM, _OP_NODE, _OP_BADCOPY = (
-                self._OP_TEXT, self._OP_VAR, self._OP_PARAM,
-                self._OP_NODE, self._OP_BADCOPY)
-            _OP_VALUEOF, _OP_IF, _OP_LITELEM, _OP_APPLYT, _OP_CHOOSE = (
-                self._OP_VALUEOF, self._OP_IF, self._OP_LITELEM,
-                self._OP_APPLYT, self._OP_CHOOSE)
-            for op in ops:
-                tag = op[0]
-                if tag == _OP_VALUEOF:
-                    items = select(ctx, op[1])
-                    if items:
-                        frags.append(escape(_string(items[0])))
-                elif tag == _OP_LITELEM:  # static attrs, no dynattrs
-                    inner = self._run_children(op[3], ctx)
-                    t, a = op[1], op[2]
-                    frags.append(
-                        f"<{t}{a}>{inner}</{t}>" if inner else f"<{t}{a}/>"
-                    )
-                elif tag == _OP_TEXT:
-                    frags.append(op[1])
-                elif tag == _OP_APPLYT:
-                    _, sel, mode, elem2, has_sorts, has_wp = op
-                    if sel is not None:
-                        nodes = select(ctx, sel)
-                    elif isinstance(ctx, _Doc):
-                        nodes = [ctx.root]
-                    elif isinstance(ctx, ET.Element):
-                        nodes = self._node_children(ctx)
-                    else:
-                        nodes = []
-                    if has_sorts:
-                        nodes = self._sorted_nodes(nodes, elem2, ctx)
-                    # tparams, not params: rebinding the function
-                    # parameter would shadow the caller's with-param
-                    # dict for the rest of the loop (code-review r13)
-                    tparams = (
-                        (self._gather_params(elem2, ctx) or None)
-                        if has_wp else None
-                    )
-                    frags.append(self._iterate(
-                        nodes,
-                        lambda n, _p=tparams, _m=mode: self._apply_one(n, _p, _m),
-                    ))
-                elif tag == _OP_IF:
-                    if self._test(ctx, op[1]):
-                        frags.append(self._run_children(op[2], ctx))
-                elif tag == _OP_CHOOSE:
-                    for tst, br in op[1]:
-                        if self._test(ctx, tst):
-                            frags.append(self._run_children(br, ctx))
-                            break
-                    else:
-                        if op[2] is not None:
-                            frags.append(self._run_children(op[2], ctx))
-                elif tag == _OP_NODE:  # generic dispatch
-                    frags.append(run_node(op[1], ctx, op[2]))
-                elif tag == _OP_VAR:
-                    self._scopes[-1][op[1].get("name", "")] = (
-                        self._eval_binding(op[1], ctx)
-                    )
-                elif tag == _OP_PARAM:
-                    pname = op[1].get("name", "")
-                    if pname not in self._scopes[-1]:  # with-param wins
-                        self._scopes[-1][pname] = self._eval_binding(op[1], ctx)
-                else:  # _OP_BADCOPY: attr-copy outside an element
-                    # constructor — no element to attach to; fail fast
-                    raise XsltUnsupported(
-                        'copy-of select="@*" outside an element constructor'
-                    )
-            return "".join(frags)
+            fns = self._cfns[id(container)]
+            if len(fns) == 1:
+                return fns[0](ctx)
+            return "".join(f(ctx) for f in fns)
         finally:
             if scoped:
                 self._scopes.pop()
@@ -1731,101 +1551,6 @@ class MiniXslt:
         tag = _local(item.tag)
         return f"<{tag}{attrs}>{inner}</{tag}>" if inner else f"<{tag}{attrs}/>"
 
-    def _run_node(self, elem: ET.Element, ctx, kind=_MISSING) -> str:
-        name = self._kind.get(id(elem)) if kind is _MISSING else kind
-        if name == "#comment":  # comments / PIs in the stylesheet
-            return ""
-        if name is not None:
-            if name == "value-of":
-                items = self._select(ctx, elem.get("select", "."))
-                return escape(_string(items[0])) if items else ""
-            if name == "copy-of":
-                items = self._select(ctx, elem.get("select", "."))
-                return "".join(self._serialize(it) for it in items)
-            if name == "for-each":
-                nodes = self._sorted_nodes(
-                    self._select(ctx, elem.get("select", ".")), elem, ctx
-                )
-                return self._iterate(nodes, lambda n: self._run_children(elem, n))
-            if name == "if":
-                return self._run_children(elem, ctx) if self._test(ctx, elem.get("test", "")) else ""
-            if name == "choose":
-                for branch in elem:
-                    if _is_xsl(branch, "when") and self._test(ctx, branch.get("test", "")):
-                        return self._run_children(branch, ctx)
-                for branch in elem:
-                    if _is_xsl(branch, "otherwise"):
-                        return self._run_children(branch, ctx)
-                return ""
-            if name == "apply-templates":
-                sel = elem.get("select")
-                if sel is not None:
-                    nodes = self._select(ctx, sel)
-                elif isinstance(ctx, _Doc):
-                    nodes = [ctx.root]
-                elif isinstance(ctx, ET.Element):
-                    nodes = self._node_children(ctx)
-                else:
-                    nodes = []
-                nodes = self._sorted_nodes(nodes, elem, ctx)
-                params = self._gather_params(elem, ctx)
-                mode = elem.get("mode")
-                return self._iterate(
-                    nodes, lambda n: self._apply_one(n, params or None, mode)
-                )
-            if name == "call-template":
-                tname = elem.get("name", "")
-                telem = self.named.get(tname)
-                if telem is None:
-                    raise XsltUnsupported(f"call to undeclared template {tname!r}")
-                params = self._gather_params(elem, ctx)
-                self._enter_template()
-                try:
-                    return self._run_children(telem, ctx, params=params or None)
-                finally:
-                    self._tdepth -= 1
-            if name == "apply-imports":
-                if not self._tframes:
-                    raise XsltUnsupported(
-                        "xsl:apply-imports outside a matched template"
-                    )
-                cur_prec, cur_mode, _ = self._tframes[-1]
-                return self._apply_one(ctx, mode=cur_mode, max_prec=cur_prec)
-            if name == "number":
-                return self._xsl_number(elem, ctx)
-            if name == "text":
-                return escape(elem.text or "")
-            if name == "element":
-                tag = self._avt(elem.get("name", ""), ctx)
-                return self._element_markup(tag, elem, ctx, "")
-            if name == "copy":
-                # shallow copy of the context node (XSLT 1.0 §7.5):
-                # elements copy the tag but NOT attributes (xsl:attribute
-                # children of the body add them); text copies through;
-                # the document node just runs the body
-                if isinstance(ctx, str):
-                    return escape(ctx)
-                if isinstance(ctx, (_Doc, _RTF)):
-                    return self._run_children(elem, ctx)
-                return self._element_markup(_local(ctx.tag), elem, ctx, "")
-            raise XsltUnsupported(f"xsl:{name}")
-        # literal result element; XSL-namespaced attributes
-        # (xsl:use-attribute-sets) are instructions, not output
-        la = self._lattrs.get(id(elem))
-        if la is None:  # element outside the compiled sheet trees
-            attrs = "".join(
-                f" {k}={quoteattr(self._avt(v, ctx))}"
-                for k, v in elem.attrib.items()
-                if not k.startswith("{" + XSL_NS + "}")
-            )
-            return self._element_markup(_local(elem.tag), elem, ctx, attrs)
-        tag, static, pairs = la
-        if static is None:
-            static = "".join(
-                f" {k}={quoteattr(self._avt(v, ctx))}" for k, v in pairs
-            )
-        return self._element_markup(tag, elem, ctx, static)
-
     def _iterate(self, nodes: list, render) -> str:
         """Run ``render`` per node with (position, last) context pushed,
         so position()/last() see the iteration per XSLT 1.0."""
@@ -1866,11 +1591,16 @@ class MiniXslt:
                     out.update(
                         self._attrset_attrs(nested, ctx, seen | {name})
                     )
-                for a in d:
-                    out[self._avt(a.get("name", ""), ctx)] = _RTF(
-                        self._run_children(a, ctx)
-                    ).text()
+                out.update(self._xsl_attributes(d, ctx))
         return out
+
+    def _xsl_attributes(self, attrs, ctx) -> list[tuple[str, str]]:
+        """(name, value) per xsl:attribute: AVT name, body string-value."""
+        return [
+            (self._avt(a.get("name", ""), ctx),
+             _RTF(self._run_children(a, ctx)).text())
+            for a in attrs
+        ]
 
     def _element_markup(self, tag: str, elem: ET.Element, ctx,
                         static_attrs: str) -> str:
@@ -1884,23 +1614,12 @@ class MiniXslt:
         renders with those skipped. Later additions replace earlier
         ones per XSLT 1.0 §7.1.3/§7.1.4: attribute sets, then literal
         attrs, then copied, then xsl:attribute."""
-        kind = self._kind.get(id(elem))
-        meta = self._emeta.get(id(elem))
-        if meta is None:
-            # element outside the compiled sheet trees — no memoizing
-            # (id() reuse hazard; see _run_children)
-            meta = (
-                elem.get("use-attribute-sets")
-                if kind in ("element", "copy")
-                else elem.get("{" + XSL_NS + "}use-attribute-sets"),
-                any(self._kind.get(id(c)) == "#attr-copy" for c in elem),
-            )
-        use_sets, has_copy = meta
+        use_sets, has_copy = self._emeta[id(elem)]
         if has_copy or use_sets:
             merged: dict[str, str] = {}
             if use_sets:
                 merged.update(self._attrset_attrs(use_sets, ctx))
-            if kind is None:  # literal result element
+            if self._kind[id(elem)] is None:  # literal result element
                 for k, v in elem.attrib.items():
                     if k.startswith("{" + XSL_NS + "}"):
                         continue
@@ -1908,18 +1627,13 @@ class MiniXslt:
             if has_copy and isinstance(ctx, ET.Element):
                 for k, v in ctx.attrib.items():
                     merged[_local(k)] = v
-            for a in self._dynattrs.get(id(elem), ()):
-                merged[self._avt(a.get("name", ""), ctx)] = _RTF(
-                    self._run_children(a, ctx)
-                ).text()
+            merged.update(self._xsl_attributes(self._dynattrs[id(elem)], ctx))
             attrs = "".join(f" {k}={quoteattr(v)}" for k, v in merged.items())
         else:
-            dyn = "".join(
-                f" {self._avt(a.get('name', ''), ctx)}="
-                + quoteattr(_RTF(self._run_children(a, ctx)).text())
-                for a in self._dynattrs.get(id(elem), ())
+            attrs = static_attrs + "".join(
+                f" {k}={quoteattr(v)}"
+                for k, v in self._xsl_attributes(self._dynattrs[id(elem)], ctx)
             )
-            attrs = static_attrs + dyn
         inner = self._run_children(elem, ctx)
         return f"<{tag}{attrs}>{inner}</{tag}>" if inner else f"<{tag}{attrs}/>"
 
@@ -1932,7 +1646,7 @@ class MiniXslt:
             if kind == "lit":
                 out.append(payload)
             else:
-                items = self._select(ctx, payload)
+                items = self._compile_select(payload)(ctx)
                 if items:
                     out.append(_string(items[0]))
         return "".join(out)
@@ -1979,19 +1693,20 @@ class MiniXslt:
             self._doc_orders[id(root)] = {
                 id(e): i for i, e in enumerate(root.iter())
             }
+        # 'a|b' alternation in key match patterns, same as template
+        # rules (code-review r7: the un-split pattern silently matched
+        # nothing)
+        plans = [
+            (_split_union(kmatch), self._compile_select(kuse))
+            for kmatch, kuse in decls
+        ]
         for elem in root.iter():
-            for kmatch, kuse in decls:
-                # 'a|b' alternation in key match patterns, same as
-                # template rules (code-review r7: the un-split pattern
-                # silently matched nothing)
-                if all(
-                    self._match_score(alt, elem) is None
-                    for alt in _split_union(kmatch)
-                ):
+            for alts, use in plans:
+                if all(self._match_score(alt, elem) is None for alt in alts):
                     continue
                 # EVERY matching declaration files the node (XSLT 1.0
                 # §12.2 unions declarations; no first-match-wins here)
-                for item in self._select(elem, kuse):
+                for item in use(elem):
                     vals = index.setdefault(_string(item), [])
                     if not vals or vals[-1] is not elem:
                         vals.append(elem)
@@ -2018,7 +1733,7 @@ class MiniXslt:
             return _Doc(self._sty_root)
         base = self.base_dir
         if len(args) == 2:
-            items = self._select(ctx, args[1].strip())
+            items = self._compile_select(args[1])(ctx)
             if not items:
                 raise XsltUnsupported(
                     "document() second argument selected no nodes"
@@ -2052,56 +1767,59 @@ class MiniXslt:
             self._parents.update(ext)
         return doc
 
-    def _key_lookup(self, inner: str, ctx) -> list:
+    def _key_args(self, inner: str):
+        """key(name, value)'s static half: the literal key name and a
+        fn(ctx) -> lookup strings (a literal value in its XPath string
+        form, else the string-values the value expression selects)."""
         args = _split_args(inner)
         if len(args) != 2:
             raise XsltUnsupported(f"key() takes 2 arguments, got {len(args)}")
-        kname = _literal(args[0].strip())
+        kname = _literal(args[0])
         if not isinstance(kname, str):
             raise XsltUnsupported("key() name must be a string literal")
+        lit = _literal(args[1])
+        if lit is None:
+            vsel = self._compile_select(args[1])
+            return kname, lambda ctx: [_string(it) for it in vsel(ctx)]
+        if not isinstance(lit, str):  # numeric literal: XPath number->string
+            lit = str(int(lit)) if lit.is_integer() else str(lit)
+        return kname, lambda ctx: [lit]
+
+    def _key_nodes(self, kname: str, values, ctx) -> list:
+        """Nodes of ``ctx``'s document filed in key ``kname`` under any
+        of the strings ``values(ctx)`` returns, in document order. The
+        per-document index is built on first use."""
         doc_root = self._containing_root(ctx)
         ikey = (id(doc_root), kname)
-        if ikey not in self._key_index:
-            self._key_index[ikey] = self._build_key(kname, doc_root)
-        index = self._key_index[ikey]
-        arg = args[1].strip()
-        lit = _literal(arg)
-        if lit is not None:
-            if isinstance(lit, str):
-                values = [lit]
-            else:  # numeric literal: XPath number->string form
-                values = [str(int(lit)) if lit.is_integer() else str(lit)]
-        else:
-            values = [_string(it) for it in self._select(ctx, arg)]
+        index = self._key_index.get(ikey)
+        if index is None:
+            index = self._key_index[ikey] = self._build_key(kname, doc_root)
         hits: list = []
         seen: set[int] = set()
-        for v in values:
+        for v in values(ctx):
             for node in index.get(v, ()):
                 if id(node) not in seen:
                     seen.add(id(node))
                     hits.append(node)
-        # union in document order, as XPath node-sets require
-        hits.sort(key=lambda n: self._doc_orders[id(doc_root)][id(n)])
+        if len(hits) > 1:
+            # union in document order, as XPath node-sets require
+            order = self._doc_orders[id(doc_root)]
+            hits.sort(key=lambda n: order[id(n)])
         return hits
 
-    # -- path / test evaluation -------------------------------------------
-
-    # -- compiled evaluators (r18) ------------------------------------------
+    # -- compiled evaluators ------------------------------------------------
     #
-    # Selects, tests and instruction lists are stylesheet-static while
-    # apply() runs per row: the _select_plan/_test_plan caches already
-    # removed the string PARSING, but every evaluation still re-entered
-    # the generic dispatchers (plan-tag branch chains in _select/_test,
-    # the op-tag loop in _run_children, the per-rule _match_score loop
-    # in _apply_one). These compilers turn each static expression into
-    # a bound Python closure ONCE per stylesheet, so the per-row cost
-    # is the closure body alone. Semantics are identical by
-    # construction: every closure is a specialization of the exact
-    # branch the generic evaluator would have taken, and anything
-    # outside the specialized shapes falls back to the generic path.
+    # Selects, tests and bindings are stylesheet-static while apply()
+    # runs per row, so each expression compiles ONCE per stylesheet into
+    # a bound closure, memoized by its text (never by row data), and
+    # the per-row cost is the closure body alone. These closures are
+    # the only evaluator: a select shape no closure specializes compiles
+    # to a closure over the _select path walker.
 
     def _compile_select(self, path: str):
-        """path -> fn(ctx) -> list, memoized per stylesheet."""
+        """path -> fn(ctx) -> list, memoized per stylesheet. '.', bare
+        @attr, bare name, $var, key(...) heads and single predicated
+        child steps specialize; every other shape runs _select."""
         fn = self._sel_fns.get(path)
         if fn is not None:
             return fn
@@ -2129,154 +1847,101 @@ class MiniXslt:
             fn = None
             if tag in (2, 6) and p.startswith("key("):
                 fn = self._compile_key_select(p)
-            if fn is None and tag == 6 and not p.startswith(
-                ("/", "key(", "document(")
-            ):
-                # single child-name step with static predicates (the
-                # common predicated select, e.g. v[@key=$k]): compile
-                # the predicate tests and run the step inline. Any
-                # positional predicate or structural step falls back.
-                try:
-                    steps = _path_steps(p)
-                except XsltUnsupported:
-                    steps = None
-                if steps is not None and len(steps) == 1:
-                    name, preds, desc = steps[0]
-                    if (
-                        not desc
-                        and "(" not in name
-                        and name not in (".", "*")
-                        and not name.startswith("@")
-                    ):
-                        pks = [_pred_kind(x) for x in preds]
-                        if all(k[0] in ("plain", "index", "last")
-                               for k in pks):
-                            plan = tuple(
-                                ("plain", self._compile_test(k[1]))
-                                if k[0] == "plain"
-                                else (k[0], k[1] if k[0] == "index" else None)
-                                for k in pks
-                            )
-
-                            def fn(ctx, _n=name, _plan=plan):
-                                if isinstance(ctx, ET.Element):
-                                    cand = [
-                                        c for c in ctx
-                                        if _local(c.tag) == _n
-                                    ]
-                                elif isinstance(ctx, _Doc):
-                                    r = ctx.root
-                                    cand = (
-                                        [r] if _local(r.tag) == _n else []
-                                    )
-                                else:
-                                    return []
-                                for kind, payload2 in _plan:
-                                    if kind == "plain":
-                                        cand = [
-                                            c for c in cand if payload2(c)
-                                        ]
-                                    elif kind == "index":
-                                        k = payload2
-                                        cand = (
-                                            [cand[k - 1]]
-                                            if 0 < k <= len(cand)
-                                            else []
-                                        )
-                                    else:  # last()
-                                        cand = cand[-1:]
-                                return cand
+            elif tag == 6 and not p.startswith(("/", "document(")):
+                fn = self._compile_step_select(p)
             if fn is None:
                 def fn(ctx, _p=path):
                     return self._select(ctx, _p)
         self._sel_fns[path] = fn
         return fn
 
+    def _compile_step_select(self, p: str):
+        """Specialize a single child-name step with static predicates
+        (the common predicated select, e.g. v[@key=$k]): the predicate
+        tests compile once and the step runs inline. Returns None (the
+        caller falls back to _select) for a positional predicate or any
+        structural step."""
+        try:
+            steps = _path_steps(p)
+        except XsltUnsupported:
+            return None
+        if len(steps) != 1:
+            return None
+        name, preds, desc = steps[0]
+        pks = [_pred_kind(x) for x in preds]
+        if (
+            desc
+            or "(" in name
+            or name in (".", "*")
+            or name.startswith("@")
+            or any(k[0] == "positional" for k in pks)
+        ):
+            return None
+        plan = tuple(
+            ("plain", self._compile_test(k[1])) if k[0] == "plain" else k
+            for k in pks
+        )
+
+        def fn(ctx):
+            if isinstance(ctx, ET.Element):
+                cand = [c for c in ctx if _local(c.tag) == name]
+            elif isinstance(ctx, _Doc):
+                cand = [ctx.root] if _local(ctx.root.tag) == name else []
+            else:
+                return []
+            for pk in plan:
+                if pk[0] == "plain":
+                    tst = pk[1]
+                    cand = [c for c in cand if tst(c)]
+                elif pk[0] == "index":
+                    k = pk[1]
+                    cand = [cand[k - 1]] if 0 < k <= len(cand) else []
+                else:  # last()
+                    cand = cand[-1:]
+            return cand
+        return fn
+
     def _compile_key_select(self, p: str):
         """Specialize ``key('name', value)`` and
         ``key('name', value)/child`` selects: the name literal, the
         value select and the optional single trailing child step are
-        static. Returns None (caller falls back to the generic path)
-        for any other shape. The per-call work left is the index lookup
+        static. Returns None (the caller falls back to _select) for any
+        other shape. The per-call work left is the index lookup
         plus the trailing child filter; the document-order sort only
         runs when a lookup actually returns multiple nodes."""
         open_at = p.index("(")
         try:
             end = _close_paren(p, open_at)
+            kname, values = self._key_args(p[open_at + 1 : end])
         except XsltUnsupported:
             return None
-        inner, rest = p[open_at + 1 : end], p[end + 1 :]
-        args = _split_args(inner)
-        if len(args) != 2:
+        rest = p[end + 1 :]
+        if not rest:
+            return lambda ctx: self._key_nodes(kname, values, ctx)
+        step = rest[1:]
+        if (
+            not rest.startswith("/")
+            or not step
+            or "/" in step
+            or "[" in step
+            or "(" in step
+            or step in (".", "*")
+            or step.startswith("@")
+        ):
             return None
-        kname = _literal(args[0].strip())
-        if not isinstance(kname, str):
-            return None
-        arg = args[1].strip()
-        lit = _literal(arg)
-        if lit is not None:
-            if isinstance(lit, str):
-                static_vals = [lit]
-            else:
-                static_vals = [
-                    str(int(lit)) if lit.is_integer() else str(lit)
-                ]
 
-            def values_fn(ctx, _v=static_vals):
-                return _v
-        else:
-            vsel = self._compile_select(arg)
-
-            def values_fn(ctx, _s=vsel):
-                return [_string(it) for it in _s(ctx)]
-        step_name = None
-        if rest:
-            if not rest.startswith("/"):
-                return None
-            step = rest[1:]
-            if (
-                not step
-                or "/" in step
-                or "[" in step
-                or "(" in step
-                or step in (".", "*")
-                or step.startswith("@")
-            ):
-                return None
-            step_name = step
-
-        def fn(ctx, _k=kname, _vals=values_fn, _step=step_name):
-            doc_root = self._containing_root(ctx)
-            ikey = (id(doc_root), _k)
-            index = self._key_index.get(ikey)
-            if index is None:
-                index = self._key_index[ikey] = self._build_key(
-                    _k, doc_root
-                )
-            hits: list = []
-            seen: set[int] = set()
-            for v in _vals(ctx):
-                for node in index.get(v, ()):
-                    if id(node) not in seen:
-                        seen.add(id(node))
-                        hits.append(node)
-            if len(hits) > 1:
-                # union in document order, as XPath node-sets require
-                order = self._doc_orders[id(doc_root)]
-                hits.sort(key=lambda n: order[id(n)])
-            if _step is None:
-                return hits
+        def fn(ctx):
             out: list = []
-            for h in hits:
-                out.extend(c for c in h if _local(c.tag) == _step)
+            for h in self._key_nodes(kname, values, ctx):
+                out.extend(c for c in h if _local(c.tag) == step)
             return out
         return fn
 
     def _compile_binding(self, elem: ET.Element):
         """xsl:variable/param/with-param -> fn(ctx) -> value, memoized
-        per element — the static classification of _eval_binding
-        (quoted literal / numeric literal / select path / body RTF)
-        done once."""
+        per element: the ``select`` expression — a quoted-string or
+        numeric literal (kept in its lexical form), or a path's
+        string-value — or the body as a result-tree fragment."""
         fn = self._bind_fns.get(id(elem))
         if fn is not None:
             return fn
@@ -2287,7 +1952,7 @@ class MiniXslt:
                 v = sel[1:-1]
                 fn = lambda ctx, _v=v: _v  # noqa: E731
             elif _literal(sel) is not None:
-                fn = lambda ctx, _v=sel: _v  # noqa: E731 (lexical form)
+                fn = lambda ctx, _v=sel: _v  # noqa: E731
             else:
                 sfn = self._compile_select(sel)
 
@@ -2301,21 +1966,18 @@ class MiniXslt:
         return fn
 
     def _compile_test(self, expr: str):
-        """test expression -> fn(ctx) -> bool, memoized. Mirrors _test
-        branch for branch; the comparison kinds whose operand shapes
-        are static (literal / $var / path) specialize, everything else
-        delegates to the interpreted _test. An XsltUnsupported raised
-        while SPECIALIZING is deferred to evaluation time — the
-        interpreter only rejects an unsupported expression when it
-        actually runs, and a compiled stylesheet must behave the same."""
+        """test expression -> fn(ctx) -> bool, memoized per stylesheet.
+        The boolean structure (_test_plan) and each comparison's operand
+        shapes are resolved here. An XsltUnsupported raised while
+        compiling is deferred to evaluation time: an unsupported test
+        fails only when it actually runs."""
         fn = self._test_fns.get(expr)
         if fn is not None:
             return fn
         try:
             fn = self._compile_test_inner(expr)
         except XsltUnsupported as exc:
-            def fn(ctx, _e=exc):
-                raise _e
+            fn = _raiser(str(exc))
         self._test_fns[expr] = fn
         return fn
 
@@ -2324,16 +1986,12 @@ class MiniXslt:
         if kind == 0:
             def fn(ctx):
                 return False
-        elif kind == 1:
+        elif kind in (1, 2):  # or / and
             subs = tuple(self._compile_test(p) for p in payload)
+            agg = any if kind == 1 else all
 
-            def fn(ctx, _s=subs):
-                return any(f(ctx) for f in _s)
-        elif kind == 2:
-            subs = tuple(self._compile_test(p) for p in payload)
-
-            def fn(ctx, _s=subs):
-                return all(f(ctx) for f in _s)
+            def fn(ctx):
+                return agg(f(ctx) for f in subs)
         elif kind == 3:
             fn = self._compile_test(payload)
         elif kind == 4:
@@ -2354,11 +2012,12 @@ class MiniXslt:
         return fn
 
     def _compile_comparison(self, expr: str, payload):
-        """kind-6 (comparison) specialization of _test. The operand
-        handling — literal-first swap, $var-as-number coercion,
-        node-set-vs-node-set sets — replays _test exactly, with the
-        static decisions (is the rhs a literal? a $var? a path?) made
-        once here."""
+        """Compile a kind-6 (comparison) test. The static decisions — is
+        each operand a literal, a $var or a path; literal-first
+        spellings swapped with the ordered operator mirrored — are made
+        once here. A $var operand compares as a number when its string
+        value is one, else as a string; node-set vs node-set follows
+        XPath 1.0 §3.4 for '=' and '!='."""
         lhs, op, rhs = payload
 
         def run_compare(values, rhs_lit, _op):
@@ -2387,8 +2046,7 @@ class MiniXslt:
             )
 
         def side(tok):
-            """('lit', value) | ('var', name) | ('path', select_fn) —
-            mirrors operand_literal's classification, made static."""
+            """('lit', value) | ('var', name) | ('path', select)."""
             if tok.startswith("$"):
                 return ("var", tok[1:])
             lit = _literal(tok)
@@ -2430,50 +2088,34 @@ class MiniXslt:
         # evaluation (the binding is scope-dependent)
         def fn(ctx, _l=lsel, _n=rval, _op=op):
             v = _string(self._lookup_var(_n))
-            num = _literal(v)
-            rhs_lit = v if num is None else num
+            rhs_lit = float(v) if _NUMBER.fullmatch(v.strip()) else v
             return run_compare([_string(x) for x in _l(ctx)], rhs_lit, _op)
         return fn
 
     def _select(self, ctx, path: str) -> list:
+        """Path walker behind the select closures for the shapes
+        _compile_select does not specialize: position()/last(), XPath
+        function calls, key()/document() heads with further steps, and
+        absolute, multi-step or descendant paths."""
         tag, payload, path = _select_plan(path)
-        if tag == 0:  # '.'
-            return [ctx]
-        if tag == 3:  # bare @attr — hot fast path
-            if isinstance(ctx, ET.Element):
-                v = ctx.attrib.get(payload)
-                return [v] if v is not None else []
-            return []
-        if tag == 4:  # bare element name — hot fast path
-            if isinstance(ctx, ET.Element):
-                return [c for c in ctx if _local(c.tag) == path]
-            if isinstance(ctx, _Doc):
-                return [ctx.root] if _local(ctx.root.tag) == path else []
-            return []
         if tag == 1:  # position() / last()
             if not self._ctx_pos:
                 raise XsltUnsupported(f"{path} outside an iteration context")
             pos, size = self._ctx_pos[-1]
             return [str(pos if path == "position()" else size)]
-        if tag == 5:  # $var reference
-            if "/" in payload or "[" in payload:
-                raise XsltUnsupported(f"path into variable {path!r}")
-            return [self._lookup_var(payload)]
+        if tag == 5:  # a plain $var compiles to a scope lookup
+            raise XsltUnsupported(f"path into variable {path!r}")
         if tag == 2:
             fname, inner = payload
             if fname == "count":
-                return [str(len(self._select(ctx, inner)))]
-            if fname == "key":
-                return self._key_lookup(inner, ctx)
+                return [str(len(self._compile_select(inner)(ctx)))]
             if fname == "generate-id":
                 if inner.strip():
-                    items = self._select(ctx, inner)
+                    items = self._compile_select(inner)(ctx)
                     if not items:
                         return [""]
                     return [self._generate_id(items[0])]
                 return [self._generate_id(ctx)]
-            if fname == "document":
-                return [self._document(inner, ctx)]
             if fname == "concat":
                 return ["".join(self._arg_string(ctx, a)
                                 for a in _split_args(inner))]
@@ -2551,24 +2193,21 @@ class MiniXslt:
             if fname == "false" and not inner.strip():
                 return [False]
             if fname == "not":
-                return [not self._test(ctx, inner)]
+                return [not self._compile_test(inner)(ctx)]
             if fname == "boolean":
-                return [self._test(ctx, inner)]
+                return [self._compile_test(inner)(ctx)]
             # text() falls through to step parsing; anything else is an
             # unsupported XPath function and fails fast there too
-            # (the bare-@attr / bare-name / $var fast paths moved into
-            # the _select_plan dispatch above)
         if path.startswith(("key(", "document(")):
-            # key(...)/<steps> or document(...)/<steps>: the node-set
-            # result is the path head (the whole-expression forms are
-            # handled by the function dispatch above). _split_path
+            # key(...) or document(...), optionally followed by
+            # /<steps>: the node-set result is the path head. _path_steps
             # can't see into the args (its scanner only tracks
             # brackets), so find the matching close paren quote-aware.
             open_at = path.index("(")
             end = _close_paren(path, open_at)
             inner = path[open_at + 1 : end]
             if path.startswith("key("):
-                cur: list = self._key_lookup(inner, ctx)
+                cur: list = self._key_nodes(*self._key_args(inner), ctx)
             else:
                 cur = [self._document(inner, ctx)]
             path = path[end + 1 :]
@@ -2639,7 +2278,8 @@ class MiniXslt:
                             raise XsltUnsupported(
                                 f"positional predicate on descendant step [{p}]"
                             )
-                        cand = [c for c in cand if self._test(c, pk[1])]
+                        tst = self._compile_test(pk[1])
+                        cand = [c for c in cand if tst(c)]
                     nxt.extend(cand)
                     continue
                 if name == ".":
@@ -2679,18 +2319,20 @@ class MiniXslt:
                     elif pk[0] == "last":
                         cand = cand[-1:]
                     elif pk[0] == "positional":
+                        tst = self._compile_test(pk[1])
                         size = len(cand)
                         kept = []
                         for i, c in enumerate(cand, 1):
                             self._ctx_pos.append((i, size))
                             try:
-                                if self._test(c, pk[1]):
+                                if tst(c):
                                     kept.append(c)
                             finally:
                                 self._ctx_pos.pop()
                         cand = kept
                     else:
-                        cand = [c for c in cand if self._test(c, pk[1])]
+                        tst = self._compile_test(pk[1])
+                        cand = [c for c in cand if tst(c)]
                 nxt.extend(cand)
             cur = nxt
         return cur
@@ -2703,7 +2345,7 @@ class MiniXslt:
             return tok[1:-1]
         if _literal(tok) is not None:
             return tok
-        items = self._select(ctx, tok)
+        items = self._compile_select(tok)(ctx)
         return _string(items[0]) if items else ""
 
     def _args_strings(self, ctx, inner: str, fname: str, n: int) -> list[str]:
@@ -2855,96 +2497,18 @@ class MiniXslt:
             self._doc_seqs[id(root)] = seq
         return seq
 
-    def _test(self, ctx, expr: str) -> bool:
-        # the structural parse (bool-operator split, group unwrap,
-        # comparison split) is stylesheet-static — classified once per
-        # distinct expression by _test_plan; only operand evaluation
-        # runs per node
-        kind, payload = _test_plan(expr)
-        if kind == 0:  # empty
-            return False
-        if kind == 1:  # or
-            return any(self._test(ctx, p) for p in payload)
-        if kind == 2:  # and
-            return all(self._test(ctx, p) for p in payload)
-        if kind == 3:  # parenthesized group
-            return self._test(ctx, payload)
-        if kind == 4:  # not(...)
-            return not self._test(ctx, payload)
-        if kind == 5:  # existence / boolean-function select
-            items = self._select(ctx, payload)
-            if len(items) == 1 and isinstance(items[0], bool):
-                return items[0]  # boolean function result, not a node-set
-            return bool(items)
-        lhs, op, rhs = payload
-        expr = expr.strip()
-
-        def operand_literal(tok: str):
-            # a $var operand compares as a numeric literal when its
-            # string value parses as a number, else as a string literal
-            if tok.startswith("$"):
-                v = _string(self._lookup_var(tok[1:]))
-                num = _literal(v)
-                return v if num is None else num
-            return _literal(tok)
-
-        rhs_lit = operand_literal(rhs)
-        if rhs_lit is None:
-            # literal-first spelling ('3 < n'): swap operands AND
-            # mirror the ordered operator — '3 < n' means 'n > 3',
-            # not 'n < 3' (code-review r7)
-            lhs, rhs = rhs, lhs
-            op = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op, op)
-            rhs_lit = operand_literal(rhs)
-            if rhs_lit is None:
-                # node-set vs node-set (XPath 1.0 §3.4): '=' is true
-                # iff ANY (a, b) pair matches; '!=' iff any pair
-                # differs. Ordered node-set comparisons stay out of
-                # the subset.
-                if op not in ("=", "!="):
-                    raise XsltUnsupported(
-                        f"ordered path-to-path comparison {expr!r}"
-                    )
-                lvals = {_string(v) for v in self._select(ctx, lhs)}
-                rvals = {_string(v) for v in self._select(ctx, rhs)}
-                if op == "=":
-                    return bool(lvals & rvals)
-                return bool(lvals and rvals and len(lvals | rvals) > 1)
-        values = [_string(v) for v in self._select(ctx, lhs)]
-        if isinstance(rhs_lit, float):
-            nums = []
-            for v in values:
-                try:
-                    nums.append(float(v))
-                except ValueError:
-                    pass
-            values = nums
-        if op == "=":
-            return any(v == rhs_lit for v in values)
-        if op == "!=":
-            return any(v != rhs_lit for v in values)
-        if not isinstance(rhs_lit, float):
-            raise XsltUnsupported(f"ordered comparison with string literal {expr!r}")
-        return any(
-            (op == "<" and v < rhs_lit)
-            or (op == "<=" and v <= rhs_lit)
-            or (op == ">" and v > rhs_lit)
-            or (op == ">=" and v >= rhs_lit)
-            for v in values
-        )
-
 
 def compile_stylesheet(src: str, base_dir: str | None = None,
                        prefer_lxml: bool = True):
     """``src`` -> callable(xml_string) -> transformed string. The
-    MiniXslt subset interpreter is the ENGINE OF RECORD; lxml's real
+    MiniXslt subset engine is the ENGINE OF RECORD; lxml's real
     libxslt is a BEST-EFFORT fast path taken when importable (it never
     is in this container — no install path — so the branch is
     unexercised here; the cross-engine agreement test stays armed and
     runs the comparison in any environment where lxml imports).
     ``base_dir`` anchors relative document() references; for the lxml
     path it becomes the parse base via a dummy base URL.
-    ``prefer_lxml=False`` pins the subset interpreter — required when
+    ``prefer_lxml=False`` pins the subset engine — required when
     the caller depends on implementation-DEFINED behavior the spec
     leaves open (generate-id() value shape: libxslt emits 'idm...'
     strings, the subset emits document-order 'dNeM' ids)."""

@@ -376,8 +376,9 @@ def test_multimodal_decode_image_is_real_and_fails_loud():
 
 def test_xsl_transform_delegates_to_interpreter():
     """sources.xml_badgerfish.xsl_transform is the reference's
-    xslPipeline entry (index.js:87-126) and delegates to the real
-    interpreter in functions/xslt.py (was a stale stub until r7)."""
+    xslPipeline entry (index.js:87-126) and delegates to the MiniXslt
+    engine in functions/xslt.py, which compiles each stylesheet to
+    closures (was a stale stub until r7)."""
     from cpx_etl_spark.sources.xml_badgerfish import xsl_transform
 
     xsl = (

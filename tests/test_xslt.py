@@ -2,10 +2,12 @@
 
 """Descendant-axis (//) coverage for the XSLT-subset interpreter —
 added late-r6; before this 'a//b' SILENTLY collapsed to 'a/b' (the
-_split_path empty-part filter), violating the module's fail-fast
-contract."""
+path splitter filtered out empty parts), violating the module's
+fail-fast contract."""
 
 from __future__ import annotations
+
+import pytest
 
 
 def _run_xsl(xsl: str, xml: str) -> str:
@@ -1156,3 +1158,95 @@ def test_union_alternatives_of_same_template_not_a_tie():
       <xsl:template match="a/b/y | */y"><hit/></xsl:template>
     </xsl:stylesheet>"""
     assert _run_xsl(xsl, "<a><b><y>v</y></b></a>") == "<hit/>"
+
+
+# Probe sheet for the single compiled evaluator: a whole-test not(),
+# an empty test, bare-name and single-step predicated selects with the
+# document node as context, and an ordered comparison against a
+# string-valued $var inside a branch that only some rows take.
+_PROBE_XSL = """<xsl:stylesheet version="1.0"
+    xmlns:xsl="http://www.w3.org/1999/XSL/Transform">
+  <xsl:variable name="s" select="'abc'"/>
+  <xsl:template match="/">
+    <o><xsl:if test="not(@x)">N</xsl:if><xsl:if test="">E</xsl:if><xsl:if
+      test="r"><xsl:for-each select="r[v='b']"><xsl:value-of
+      select="v[2]"/></xsl:for-each></xsl:if><xsl:if
+      test="r[v='zz']"><xsl:if test="r/v &lt; $s">bad</xsl:if></xsl:if></o>
+  </xsl:template>
+</xsl:stylesheet>"""
+
+_NUMBER_NAMES_XSL = """<xsl:stylesheet version="1.0"
+    xmlns:xsl="http://www.w3.org/1999/XSL/Transform">
+  <xsl:template match="r">
+    <xsl:variable name="v" select="nan"/>
+    <o a="{$v}"><xsl:value-of
+      select="concat(nan,'|',inf,'|',infinity,'|',1.50,'|',-2,'|',.5)"/></o>
+  </xsl:template>
+</xsl:stylesheet>"""
+
+
+@pytest.mark.parametrize(
+    "xsl, xml, expected",
+    [
+        pytest.param(_PROBE_XSL, "<r><v>a</v><v>b</v></r>", "<o>Nb</o>",
+                     id="not-empty-docctx-untaken-bad-branch"),
+        pytest.param(_PROBE_XSL, "<r><v>zz</v></r>", "ordered comparison",
+                     id="ordered-string-var-raises-when-run"),
+        # XPath Number is -?(Digits('.'Digits?)?|'.'Digits): 'nan',
+        # 'inf' and 'infinity' are element names, not numbers
+        pytest.param(_NUMBER_NAMES_XSL,
+                     "<r><nan>5</nan><inf>7</inf><infinity>9</infinity></r>",
+                     '<o a="5">5|7|9|1.50|-2|.5</o>',
+                     id="number-literal-grammar"),
+    ],
+)
+def test_single_evaluator_shapes(xsl, xml, expected):
+    """Shapes of the compiled evaluator no other test reaches. An
+    unsupported expression raises XsltUnsupported only when the
+    instruction holding it runs, never when the sheet compiles."""
+    from cpx_etl_spark.functions.xslt import MiniXslt, XsltUnsupported
+
+    sheet = MiniXslt(xsl)
+    if expected.startswith("<"):
+        assert sheet.apply(xml) == expected
+    else:
+        with pytest.raises(XsltUnsupported, match=expected):
+            sheet.apply(xml)
+
+
+_ROW_DATA_XSL = """<xsl:stylesheet version="1.0"
+    xmlns:xsl="http://www.w3.org/1999/XSL/Transform">
+  <xsl:key name="k" match="v" use="@id"/>
+  <xsl:variable name="first" select="r/v[1]/@id"/>
+  <xsl:template match="/">
+    <o n="{count(key('k', $first))}" t="{r/v[last()]}"><xsl:for-each
+      select="r/v[@id = $first]"><xsl:value-of
+      select="concat(., '-', @id)"/></xsl:for-each><xsl:if
+      test="r/v[2]/@id != $first">d</xsl:if></o>
+  </xsl:template>
+</xsl:stylesheet>"""
+
+
+@pytest.mark.parametrize("xsl", [_PROBE_XSL, _ROW_DATA_XSL],
+                         ids=["probe", "row-data-operands"])
+def test_compiled_memo_tables_do_not_grow_with_rows(xsl):
+    """The select / test / binding memo tables are keyed by stylesheet
+    text only: 100 more rows with distinct values (flowing through
+    key(), AVTs, $var comparisons and predicates) add no entry, so a
+    long-lived worker applying one sheet cannot leak through them."""
+    from cpx_etl_spark.functions.xslt import MiniXslt
+
+    sheet = MiniXslt(xsl)
+
+    def sizes():
+        return (len(sheet._sel_fns), len(sheet._test_fns),
+                len(sheet._bind_fns))
+
+    def row(i):
+        return f'<r><v id="i{i}">b</v><v id="j{i}">b{i}</v></r>'
+
+    sheet.apply(row(0))
+    before = sizes()
+    outs = {sheet.apply(row(i)) for i in range(1, 101)}
+    assert sizes() == before
+    assert len(outs) == 100
